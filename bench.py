@@ -318,10 +318,10 @@ def main() -> None:
             # measures what the protocol claims (plan-amortized numbers
             # stay visible for the headline tier under plan_build).
             from gcp_cloudsql_to_bigquery_spark.operators.similarity import (
-                _PQ_PLAN_CACHE,
+                reset_plan_cache,
             )
 
-            _PQ_PLAN_CACHE.clear()
+            reset_plan_cache()
             t0 = time.time()
             qs[name](spark, sf_dir).toPandas()
             best = min(best, time.time() - t0)

@@ -68,8 +68,11 @@ def sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("ts").alias("sess_end"),
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 2).alias("sess_value"),
+        # exact integer microseconds, then one division — the difference of
+        # two double-cast epochs loses the last digit (1233.6885 s rounded
+        # to 1233.688 where the oracle's microsecond date_diff gives 1233.689)
         F.round(
-            (F.max(F.col("ts").cast("double")) - F.min(F.col("ts").cast("double"))), 3
+            (F.unix_micros(F.max("ts")) - F.unix_micros(F.min("ts"))) / 1e6, 3
         ).alias("duration_sec"),
     )
 

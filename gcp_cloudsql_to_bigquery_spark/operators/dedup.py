@@ -19,6 +19,7 @@ North-star extension surface (BASELINE.json).  Scale design:
 from __future__ import annotations
 
 import hashlib
+import math
 
 import pandas as pd
 from pyspark import StorageLevel
@@ -363,6 +364,19 @@ N_BANDS = 16
 ROWS_PER_BAND = N_HASHES // N_BANDS
 
 
+def estimate_cutoff(threshold: float) -> float:
+    """Signature-estimate pre-filter cut for an exact Jaccard ``threshold``.
+
+    The estimate of J from N_HASHES minhashes has standard error
+    sqrt(j(1-j)/N_HASHES), largest at j = 0.5; the cut sits five of the
+    largest standard errors any pair with J >= ``threshold`` can have below
+    the threshold (0.55 for the default 0.8), so a true pair is dropped
+    with probability about 3e-7 (normal approximation) at any threshold.
+    """
+    j = max(threshold, 0.5)
+    return threshold - 5 * math.sqrt(j * (1 - j) / N_HASHES)
+
+
 def minhash_signatures(docs_with_shingles: DataFrame) -> DataFrame:
     """64 minhash values per doc (packed into one array column) plus the
     shingle-set size ``n_sh``: explode shingles once, take 64 mins of
@@ -395,10 +409,11 @@ def lsh_candidate_pairs(sig: DataFrame, threshold: float = 0.8) -> DataFrame:
     pre-filter candidates on the signature-estimated Jaccard.
 
     The estimate (fraction of equal minhashes) costs a 64-int compare per
-    pair — orders cheaper than exact shingle intersection.  Cut at 0.55 for
-    a 0.8 exact threshold: stderr of the estimate is ≈√(j(1-j)/64) ≈ 0.05,
-    so true positives sit >4σ above the cut while the j≈0.5 bulk of a
-    near-degenerate corpus is dropped before the expensive verify.
+    pair — orders cheaper than exact shingle intersection.  The cut comes
+    from ``threshold`` (:func:`estimate_cutoff`: 0.55 for the 0.8 default,
+    where the estimate's stderr is ≈√(j(1-j)/64) ≈ 0.05), so true positives
+    sit 5σ above it while the j≈0.5 bulk of a near-degenerate corpus is
+    dropped before the expensive verify.
 
     Order of operations (r7): the band join emits only bare (doc_a,
     doc_b) ids and DISTINCTS them BEFORE the estimate — a pair whose
@@ -490,7 +505,7 @@ def lsh_candidate_pairs(sig: DataFrame, threshold: float = 0.8) -> DataFrame:
     return (
         pairs.join(sa, "doc_a")
         .join(sb, "doc_b")
-        .filter((est >= 0.55) & size_band)
+        .filter((est >= estimate_cutoff(threshold)) & size_band)
         .select("doc_a", "doc_b")
     )
 

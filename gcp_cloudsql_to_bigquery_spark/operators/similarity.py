@@ -990,6 +990,12 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PQ_PLAN_CACHE: dict[tuple, DataFrame] = {}
 
 
+def reset_plan_cache() -> None:
+    """Forget every prepared ``ann_pq_topk`` plan, so the next call plans
+    (and reads its codebook) from scratch."""
+    _PQ_PLAN_CACHE.clear()
+
+
 def _pq_head_from_parquet(sf_dir: str, k: int = _PQ_K) -> dict:
     """``{vec_id: [float|None, ...] | None}`` for ``vec_id < k`` — a
     driver-side pyarrow read with row-group-stat pruning (microseconds on

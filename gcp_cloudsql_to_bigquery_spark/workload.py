@@ -7,51 +7,18 @@ Each operator module self-registers its queries via ``registry.register``;
 from __future__ import annotations
 
 from . import registry
-from .operators import relational  # noqa: F401
 
-# Widened per milestone (SURVEY.md §7): joins, aggregates, windows, scalar
-# functions, streaming, dedup/similarity/text extensions.
-_OPTIONAL_MODULES = (
-    "gcp_cloudsql_to_bigquery_spark.operators.joins",
-    "gcp_cloudsql_to_bigquery_spark.operators.tpch",
-    "gcp_cloudsql_to_bigquery_spark.operators.aggregates",
-    "gcp_cloudsql_to_bigquery_spark.operators.windows",
-    "gcp_cloudsql_to_bigquery_spark.functions.scalar",
-    "gcp_cloudsql_to_bigquery_spark.functions.complex",
-    "gcp_cloudsql_to_bigquery_spark.operators.dedup",
-    "gcp_cloudsql_to_bigquery_spark.operators.similarity",
-    "gcp_cloudsql_to_bigquery_spark.operators.text",
-    "gcp_cloudsql_to_bigquery_spark.operators.multimodal",
-    "gcp_cloudsql_to_bigquery_spark.operators.curation",
-    "gcp_cloudsql_to_bigquery_spark.operators.analytics",
-    "gcp_cloudsql_to_bigquery_spark.operators.quality",
-    "gcp_cloudsql_to_bigquery_spark.operators.graph",
-    "gcp_cloudsql_to_bigquery_spark.operators.timeseries",
-    "gcp_cloudsql_to_bigquery_spark.streaming.events",
-    "gcp_cloudsql_to_bigquery_spark.streaming.stateful",
-    "gcp_cloudsql_to_bigquery_spark.streaming.elt",
-    "gcp_cloudsql_to_bigquery_spark.ingest.routing",
-    "gcp_cloudsql_to_bigquery_spark.ingest.queries",
-    "gcp_cloudsql_to_bigquery_spark.sources.files",
-    "gcp_cloudsql_to_bigquery_spark.sources.jdbc",
-    "gcp_cloudsql_to_bigquery_spark.sources.pysource",
-    "gcp_cloudsql_to_bigquery_spark.operators.scale",
-    "gcp_cloudsql_to_bigquery_spark.operators.linkage",
-    "gcp_cloudsql_to_bigquery_spark.operators.sqlx",
-)
-
-
-def _load_optional() -> None:
-    import importlib
-
-    for mod in _OPTIONAL_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError:
-            pass  # milestone not built yet
-
-
-_load_optional()
+# Every operator module self-registers on import; the import order is the
+# registry order.  Plain imports: a module that fails to import fails the
+# registry loudly instead of silently shrinking it.
+from .operators import relational, joins, tpch, aggregates, windows  # noqa: F401
+from .functions import scalar, complex  # noqa: F401
+from .operators import dedup, similarity, text, multimodal, curation  # noqa: F401
+from .operators import analytics, quality, graph, timeseries  # noqa: F401
+from .streaming import events, stateful, elt  # noqa: F401
+from .ingest import routing, queries as _ingest_queries  # noqa: F401
+from .sources import files, jdbc, pysource  # noqa: F401
+from .operators import scale, linkage, sqlx  # noqa: F401
 
 # The driver's correctness gate samples a 50-query prefix of the registry.
 # Round-10 ordering (witnessing rotation since r7; VERDICT r9 item 1):

@@ -62,3 +62,30 @@ def test_percentile_approx_accuracy(spark):
         r = rows[k]
         assert abs(r.p50_exact - p50) < 1e-3 and abs(r.p99_exact - p99) < 1e-3
         assert r.p50_in_bounds and r.p99_in_bounds, (k, r)
+
+
+def test_sessionize_duration_is_exact_at_rounding_boundary(spark, tmp_path):
+    """A 1233.6885 s session rounds half-up to 1233.689, as DuckDB's
+    microsecond date_diff does; the difference of two double-cast epochs
+    (1233.68849992...) would round it down to 1233.688."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t0 = datetime.datetime(2024, 1, 1)
+    t1 = t0 + datetime.timedelta(microseconds=1_233_688_500)
+    events = pa.table(
+        {
+            "event_id": pa.array([0, 1], pa.int64()),
+            "ts": pa.array([t0, t1], pa.timestamp("us")),
+            "user_id": pa.array([7, 7], pa.int64()),
+            "event_type": ["view", "view"],
+            "value": [1.0, 2.0],
+            "props": ["{}", "{}"],
+        }
+    )
+    pq.write_table(events, tmp_path / "events.parquet")
+    (row,) = queries()["sessionize_batch"](spark, str(tmp_path)).collect()
+    assert row.n_events == 2
+    assert row.duration_sec == 1233.689

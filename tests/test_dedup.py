@@ -101,3 +101,29 @@ def test_hll_sketch_rollup_estimates_match_exact(spark):
     for k, n in exact.items():
         assert rows[k].exact_customers == n, (k, rows[k].exact_customers, n)
         assert rows[k].hll_within_5pct, (k, n)
+
+
+def test_lsh_estimate_cutoff_follows_threshold():
+    # the registry's 0.8 threshold keeps exactly the old 0.55 cut over every
+    # estimate 64 minhashes can produce
+    cut = dedup.estimate_cutoff(0.8)
+    assert all((k / 64 >= cut) == (k / 64 >= 0.55) for k in range(65))
+    cuts = [dedup.estimate_cutoff(t / 20) for t in range(1, 21)]
+    assert cuts == sorted(cuts)
+    assert all(c < t / 20 for t, c in zip(range(1, 20), cuts))
+
+
+def test_lsh_keeps_true_pair_below_the_default_cut(spark):
+    """At threshold 0.5 a colliding pair whose signature estimate is 0.53
+    must survive (a fixed 0.55 cut dropped it); at 0.8 it is pruned."""
+    sig_a = list(range(64))
+    sig_b = sig_a[:34] + [1000 + i for i in range(30)]  # 34/64 equal, band 0 collides
+    sig = spark.createDataFrame(
+        [(1, 10, sig_a), (2, 10, sig_b)], "doc_id long, n_sh int, sig array<long>"
+    )
+
+    def pairs(t):
+        return {(r.doc_a, r.doc_b) for r in dedup.lsh_candidate_pairs(sig, threshold=t).collect()}
+
+    assert pairs(0.5) == {(1, 2)}
+    assert pairs(0.8) == set()

@@ -315,7 +315,7 @@ def test_pq_encode_is_scan_local(spark):
     # pre-execution shape this test pins
     from gcp_cloudsql_to_bigquery_spark.operators import similarity as S
 
-    S._PQ_PLAN_CACHE.clear()
+    S.reset_plan_cache()
     df = queries()["ann_pq_topk"](spark, "/root/testdata/sf0.001")
     plan = physical_plan(df)
     assert "Join" not in plan, plan

@@ -223,7 +223,7 @@ def test_pq_rank_windows_have_partial_window_group_limit(spark):
 
     # fresh build (see test_plans.test_pq_encode_is_scan_local): a cached,
     # already-executed prepared plan explains in its final adaptive shape
-    S._PQ_PLAN_CACHE.clear()
+    S.reset_plan_cache()
     for df, k in (
         (queries()["ann_pq_topk"](spark, SF0001), 5),
         (queries()["ann_ivfpq_topk"](spark, SF0001), 5),

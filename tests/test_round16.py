@@ -98,7 +98,7 @@ def test_pq_topk_plan_cache_reuses_per_tier(spark):
     from gcp_cloudsql_to_bigquery_spark.operators import similarity as S
     from gcp_cloudsql_to_bigquery_spark.workload import queries
 
-    S._PQ_PLAN_CACHE.clear()
+    S.reset_plan_cache()
     a = queries()["ann_pq_topk"](spark, SF0001)
     b = queries()["ann_pq_topk"](spark, SF0001)
     assert a is b, "repeat invocation must return the prepared plan"
